@@ -164,8 +164,8 @@ def _r4_tier_fns():
 
 
 def _hnsw_fn(spark, sf_dir):
-    """r5 bench entry: top-k against partitioned HNSW graphs (numpy
-    backend unless hnswlib is importable).  Graphs are built and cached
+    """r5 bench entry: top-k against partitioned HNSW graphs
+    (NumpyHNSW).  Graphs are built and cached
     once outside the timed loop (index-build work, amortized in
     production exactly like the ivfpq codes table); the timed number is
     the broadcast-queries graph walk + global candidate merge.  Returns

@@ -12,7 +12,6 @@ SF_SMOKE = "/root/testdata/sf0.001"
 _SLOW_TESTS = {
     "test_ann.py::test_cell_radii_sidecar_roundtrip_serves_pruned",  # 5.2s
     "test_ann.py::test_celled_hnsw_salted_equals_unsalted_at_exhaustive_ef",  # 5.5s
-    "test_ann.py::test_hnsw_chunked_explicit_spill_dir_sweeps_prior_calls",  # 6.2s
     "test_ann.py::test_lsh_recall_uniform_corpus[1]",  # 7.8s
     "test_ann.py::test_pruned_celled_hnsw_equals_unpruned",  # 16.1s
     "test_ann.py::test_pruned_equals_unpruned_on_salted_layout",  # 7.4s
@@ -50,7 +49,6 @@ _SLOW_TESTS = {
     "test_diversify.py::test_mmr_over_ann_pool_matches_exact_at_full_recall",  # 5.3s
     "test_docs_purge.py::test_retention_cadence_inside_the_stream",  # 16.4s
     "test_gate_twins.py::test_bm25_stored_twin_detects_ignored_log",  # 5.1s
-    "test_gate_twins.py::test_celled_hnsw_serving_shape_twin_detects_drift",  # 14.2s
     "test_gate_twins.py::test_celled_hnsw_twin_detects_drift",  # 12.2s
     "test_gate_twins.py::test_deletion_twin_detects_kept_tombstones",  # 16.6s
     "test_gate_twins.py::test_deletion_twin_detects_tie_rule_drop",  # 16.6s

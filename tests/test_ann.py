@@ -176,26 +176,18 @@ def test_ivf_kmeans_recall_and_pruning_clustered(spark, clustered):
 
 
 def test_hnsw_tier_gated_or_correct(spark, normed):
-    """Tier B on the numpy backend (always available since r5): graphs are
-    built per partition, queried with the reference's ef=50, and globally
+    """Tier B (NumpyHNSW, always available since r5): graphs are built
+    per partition, queried with the reference's ef=50, and globally
     merged; recall vs exact must be >=0.9 at k=1 AND k=5 on the driver
-    corpus.  The hnswlib backend, when importable, must meet the same bar
-    (same assertion body runs for it)."""
+    corpus."""
     from vector_search_question_answer_api_spark.operators import ann_hnsw
 
     q, idx = _qi(normed, 10)
-    backends = ["numpy"] + (["hnswlib"] if ann_hnsw.HNSW_AVAILABLE else [])
-    for backend in backends:
-        graphs = ann_hnsw.build_partitioned_hnsw(idx, dim=64, backend=backend)
-        for k in (1, 5):
-            got = _topk_sets(ann_hnsw.hnsw_topk(spark, graphs, q, k=k))
-            exact = _topk_sets(knn_exact_expr(q, idx, k=k))
-            assert _recall(exact, got) >= 0.9, (backend, k)
-    if not ann_hnsw.HNSW_AVAILABLE:
-        import pytest as _pytest
-
-        with _pytest.raises(NotImplementedError):
-            ann_hnsw.build_partitioned_hnsw(idx, dim=64, backend="hnswlib")
+    graphs = ann_hnsw.build_partitioned_hnsw(idx, dim=64)
+    for k in (1, 5):
+        got = _topk_sets(ann_hnsw.hnsw_topk(spark, graphs, q, k=k))
+        exact = _topk_sets(knn_exact_expr(q, idx, k=k))
+        assert _recall(exact, got) >= 0.9, k
 
 
 def test_ivf_ondisk_layout_prunes_partitions(spark, sf_dir, tmp_path):
@@ -339,12 +331,12 @@ def test_celled_hnsw_exhaustive_probe_equals_ivf(spark, clustered):
     q, idx = _qi(clustered, 10)
     cents = train_centroids(idx, dim=64, n_cells=8, n_iters=3)
     graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy"
+        idx, centroids=cents, dim=64, n_cells=8
     )
     got = {
         (r["query_id"], r["rank"]): (r["doc_id"], r["distance"])
-        for r in ann_hnsw.celled_hnsw_topk(
-            spark, graphs, q, centroids=cents, k=5, ef=600,
+        for r in ann_hnsw.celled_hnsw_topk_cogrouped(
+            graphs, q, centroids=cents, k=5, ef=600,
             dim=64, n_cells=8, nprobe=2,
         ).collect()
     }
@@ -370,11 +362,11 @@ def test_celled_hnsw_recall_at_working_ef(spark, clustered):
     q, idx = _qi(clustered, 25)
     cents = train_centroids(idx, dim=64, n_cells=8, n_iters=3)
     graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy"
+        idx, centroids=cents, dim=64, n_cells=8
     )
     got = _topk_sets(
-        ann_hnsw.celled_hnsw_topk(
-            spark, graphs, q, centroids=cents, k=10, ef=50,
+        ann_hnsw.celled_hnsw_topk_cogrouped(
+            graphs, q, centroids=cents, k=10, ef=50,
             dim=64, n_cells=8, nprobe=4,
         )
     )
@@ -439,141 +431,35 @@ def test_hnsw_topk_drops_disconnection_padding(spark):
     assert all(np.isfinite(r["distance"]) for r in rows)
 
 
-def test_celled_hnsw_cogrouped_equals_collected(spark, clustered):
-    """VERDICT r5 missing #3: the cogrouped (no driver collect) cell-routed
-    walk must emit exactly what the collected form emits — same ids,
-    ranks, distances."""
-    from vector_search_question_answer_api_spark.operators import ann_hnsw
-    from vector_search_question_answer_api_spark.operators.ivf import train_centroids
-
-    q, idx = _qi(clustered, 15)
-    cents = train_centroids(idx, dim=64, n_cells=8, n_iters=3)
-    graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy"
-    ).cache()
-    kwargs = dict(centroids=cents, k=5, ef=50, dim=64, n_cells=8, nprobe=4)
-    got = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
-        for r in ann_hnsw.celled_hnsw_topk_cogrouped(
-            graphs, q, **kwargs
-        ).collect()
-    }
-    want = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
-        for r in ann_hnsw.celled_hnsw_topk(spark, graphs, q, **kwargs).collect()
-    }
-    assert got == want and got
-
-
-def test_hnsw_chunked_equals_monolithic(spark, clustered):
-    """Chunked query iteration (bounded driver memory) unions to exactly
-    the monolithic result, including a final partial chunk — and the
-    returned plan is ONE parquet scan of the eagerly spilled chunks, not
-    a per-chunk union tree (ADVICE r6: the lazy union kept every chunk's
-    closure and local relation alive until execution, so driver memory
-    scaled with the whole batch)."""
-    from vector_search_question_answer_api_spark.operators import ann_hnsw
-
-    q, idx = _qi(clustered, 23)  # 23 rows -> chunks of 10,10,3
-    graphs = ann_hnsw.build_partitioned_hnsw(
-        idx.repartition(4, "doc_id"), dim=64, backend="numpy"
-    ).cache()
-    res = ann_hnsw.hnsw_topk_chunked(spark, graphs, q, k=5, ef=60, chunk_rows=10)
-    got = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
-        for r in res.collect()
-    }
-    want = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
-        for r in ann_hnsw.hnsw_topk(spark, graphs, q, k=5, ef=60).collect()
-    }
-    assert got == want and got
-    # plan-size pin: exactly one FileScan, zero Union nodes — constant in
-    # the number of chunks (3 here)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FileScan parquet") == 1, plan
-    assert "Union" not in plan, plan
-
-
-def test_hnsw_chunked_explicit_spill_dir_sweeps_prior_calls(
-    spark, clustered, tmp_path
-):
-    """VERDICT r8 What's-wrong #2: an explicit ``spill_dir`` must not
-    accumulate one abandoned ``call-*`` subdirectory per call — entry
-    sweeps previous calls' spill, so two sequential calls leave at most
-    one live subdirectory (and the second call's result is correct)."""
-    import os
-
-    from vector_search_question_answer_api_spark.operators import ann_hnsw
-
-    q, idx = _qi(clustered, 12)
-    graphs = ann_hnsw.build_partitioned_hnsw(
-        idx.repartition(2, "doc_id"), dim=64, backend="numpy"
-    ).cache()
-    spill = str(tmp_path / "spill")
-    r1 = ann_hnsw.hnsw_topk_chunked(
-        spark, graphs, q, k=5, ef=60, chunk_rows=5, spill_dir=spill
-    )
-    r1.collect()  # consume before the directory is reused
-    assert len(os.listdir(spill)) == 1
-    r2 = ann_hnsw.hnsw_topk_chunked(
-        spark, graphs, q, k=5, ef=60, chunk_rows=5, spill_dir=spill
-    )
-    got = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
-        for r in r2.collect()
-    }
-    want = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
-        for r in ann_hnsw.hnsw_topk(spark, graphs, q, k=5, ef=60).collect()
-    }
-    assert got == want and got
-    assert len([d for d in os.listdir(spill) if d.startswith("call-")]) == 1
-
-
 def test_celled_hnsw_index_roundtrip_and_partition_pruning(
     spark, clustered, tmp_path
 ):
     """The materialized graph index (cell-partitioned parquet of blobs)
-    answers identically to the in-memory graphs frame, and the collected
-    walk's probed-cell filter reaches the scan as a partition filter."""
-    from pyspark.sql import functions as F
-
+    answers identically to the in-memory graphs frame through the
+    cogrouped walk."""
     from vector_search_question_answer_api_spark.operators import ann_hnsw
     from vector_search_question_answer_api_spark.operators.ivf import train_centroids
 
     q, idx = _qi(clustered, 10)
     cents = train_centroids(idx, dim=64, n_cells=8, n_iters=3)
     graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy"
+        idx, centroids=cents, dim=64, n_cells=8
     )
     path = str(tmp_path / "hnsw_cells")
     ann_hnsw.write_celled_hnsw_index(graphs, path)
     reread = ann_hnsw.read_celled_hnsw_index(spark, path)
     kwargs = dict(centroids=cents, k=5, ef=50, dim=64, n_cells=8, nprobe=4)
-    want = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
-        for r in ann_hnsw.celled_hnsw_topk(spark, graphs, q, **kwargs).collect()
-    }
-    got_df = ann_hnsw.celled_hnsw_topk(spark, reread, q, **kwargs)
-    got = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
-        for r in got_df.collect()
-    }
-    assert got == want and got
-    # probed-cell pruning is physical: the scan carries a cell partition
-    # filter, so unprobed cell directories are never read
-    plan = got_df._jdf.queryExecution().executedPlan().toString()
-    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
-    assert scans and any("PartitionFilters: [cell" in ln for ln in scans), scans
-    # the cogrouped form reads the same artifact identically
-    cg = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
-        for r in ann_hnsw.celled_hnsw_topk_cogrouped(
-            reread, q, **kwargs
-        ).collect()
-    }
-    assert cg == want
+
+    def keyed(g):
+        return {
+            (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
+            for r in ann_hnsw.celled_hnsw_topk_cogrouped(
+                g, q, **kwargs
+            ).collect()
+        }
+
+    want = keyed(graphs)
+    assert keyed(reread) == want and want
 
 
 def test_knn_graph_matches_exact_neighbors(spark, clustered):
@@ -614,18 +500,18 @@ def test_knn_graph_matches_exact_neighbors(spark, clustered):
 def test_celled_hnsw_salted_equals_unsalted_at_exhaustive_ef(spark, clustered):
     """cell_salts shards a hot cell into several graphs under the SAME
     cell key; the shards partition the cell, so at exhaustive ef the
-    salted layout must emit exactly the unsalted result in BOTH serving
-    shapes, and the salted build must emit more graph rows."""
+    salted layout must emit exactly the unsalted result, and the salted
+    build must emit more graph rows."""
     from vector_search_question_answer_api_spark.operators import ann_hnsw
     from vector_search_question_answer_api_spark.operators.ivf import train_centroids
 
     q, idx = _qi(clustered, 10)
     cents = train_centroids(idx, dim=64, n_cells=8, n_iters=3)
     plain = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy"
+        idx, centroids=cents, dim=64, n_cells=8
     ).cache()
     salted = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy",
+        idx, centroids=cents, dim=64, n_cells=8,
         cell_salts=4,
     ).cache()
     assert salted.count() > plain.count()
@@ -637,8 +523,7 @@ def test_celled_hnsw_salted_equals_unsalted_at_exhaustive_ef(spark, clustered):
             for r in df.collect()
         }
 
-    want = keyed(ann_hnsw.celled_hnsw_topk(spark, plain, q, **kwargs))
-    assert keyed(ann_hnsw.celled_hnsw_topk(spark, salted, q, **kwargs)) == want
+    want = keyed(ann_hnsw.celled_hnsw_topk_cogrouped(plain, q, **kwargs))
     assert keyed(
         ann_hnsw.celled_hnsw_topk_cogrouped(salted, q, **kwargs)
     ) == want
@@ -654,7 +539,7 @@ def test_celled_hnsw_salted_recall_at_working_ef(spark, clustered):
     q, idx = _qi(clustered, 25)
     cents = train_centroids(idx, dim=64, n_cells=8, n_iters=3)
     salted = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy",
+        idx, centroids=cents, dim=64, n_cells=8,
         cell_salts=4,
     )
     got = _topk_sets(
@@ -1077,7 +962,7 @@ def test_pruned_celled_hnsw_equals_unpruned(spark, clustered):
         centroid_grid(64, 8),
     ):
         graphs = ann_hnsw.build_celled_hnsw(
-            idx, centroids=cents, dim=64, n_cells=8, backend="numpy"
+            idx, centroids=cents, dim=64, n_cells=8
         ).persist()
         radii = ann_hnsw.cell_radii(idx, centroids=cents, n_cells=8)
         assert len(radii) == 8 and all(r >= 0.0 for r in radii)
@@ -1102,7 +987,7 @@ def test_pruned_celled_hnsw_equals_unpruned(spark, clustered):
     # phase-2 probes
     cents = train_centroids(idx, n_cells=8, n_iters=4)
     graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy"
+        idx, centroids=cents, dim=64, n_cells=8
     ).persist()
     radii = ann_hnsw.cell_radii(idx, centroids=cents, n_cells=8)
     routed1 = q.withColumn(
@@ -1146,7 +1031,7 @@ def test_cell_radii_sidecar_roundtrip_serves_pruned(spark, clustered, tmp_path):
     )
     cents = train_centroids(idx, n_cells=8, n_iters=3)
     graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy"
+        idx, centroids=cents, dim=64, n_cells=8
     ).persist()
     radii = ann_hnsw.cell_radii(idx, centroids=cents, n_cells=8)
     path = str(tmp_path / "graph_store")
@@ -1204,7 +1089,7 @@ def test_pruned_equals_unpruned_on_salted_layout(spark, clustered):
     )
     cents = train_centroids(idx, n_cells=8, n_iters=4)
     graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy",
+        idx, centroids=cents, dim=64, n_cells=8,
         cell_salts=3,
     ).persist()
     # really salted: at least one cell holds more than one graph row
@@ -1334,3 +1219,15 @@ def test_cell_scores_hoisted_bit_identical_to_r15_form(spark, normed):
     for r in got:
         assert r["old_s"] == r["new_s"], r["vec_id"]
         assert r["old_c"] == r["new_c"], r["vec_id"]
+
+
+@pytest.mark.parametrize("bad", [float("inf"), float("nan")])
+def test_non_finite_centroid_raises_named_error(spark, bad):
+    """A NaN/inf centroid component is a named ValueError pointing at the
+    centroid, not a SQL analysis error over an unparseable literal."""
+    from vector_search_question_answer_api_spark.operators import ivf
+
+    with pytest.raises(ValueError, match="centroid 1 "):
+        ivf.assign_cell(F.col("v"), ((1.0, 0.0), (bad, 0.0)))
+    with pytest.raises(ValueError, match="centroid 0 "):
+        ivf.probe_cells(F.col("v"), ((0.0, bad), (1.0, 0.0)), 2)

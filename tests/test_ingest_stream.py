@@ -50,7 +50,6 @@ def ingested(spark, tmp_path_factory):
         centroids=cents,
         dim=DIM,
         n_cells=N_CELLS,
-        backend="numpy",
         span_k=8,
         cms_depth=3,
         cms_width=256,
@@ -157,7 +156,7 @@ def test_ann_serving_equals_full_rebuild(spark, ingested, tmp_path):
     )
     full = graph_rows(
         ann_hnsw.build_celled_hnsw(
-            fin, centroids=cents, dim=DIM, n_cells=N_CELLS, backend="numpy"
+            fin, centroids=cents, dim=DIM, n_cells=N_CELLS
         )
     )
     assert maintained == full and maintained
@@ -595,7 +594,6 @@ def test_graph_radii_flag_seeds_existing_store(spark, tmp_path):
             centroids=cents,
             dim=DIM,
             n_cells=N_CELLS,
-            backend="numpy",
             trigger_once=True,
             graph_radii=True,
         )
@@ -612,7 +610,6 @@ def test_graph_radii_flag_seeds_existing_store(spark, tmp_path):
         centroids=cents,
         dim=DIM,
         n_cells=N_CELLS,
-        backend="numpy",
         trigger_once=True,
     )
     assert q0.awaitTermination(300)

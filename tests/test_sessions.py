@@ -461,3 +461,66 @@ def test_pick_candidate_properties():
             assert _pick_candidate(srow, T, deleted) == _pick_candidate(
                 arow, T, deleted
             )
+
+
+def test_replay_topic_gate_margin_clears_float32_narrowing(
+    spark, sf_dir, monkeypatch
+):
+    """``_attach_candidates`` ships q_vec/cand_vec as float32, which moves
+    each topic-gate similarity by at most ~1e-7.  That only leaves gate
+    decisions unchanged while no evaluation sits that close to the
+    threshold, so over the smoke fixture's 200-event replay (the
+    ``qa_sessions_replay`` gate's events) the minimum
+    |sim - topic_similarity_threshold| must stay above 1e-5."""
+    import numpy as np
+
+    from vector_search_question_answer_api_spark.config import DEFAULT_CONFIG
+    from vector_search_question_answer_api_spark.operators import sessions as S
+    from vector_search_question_answer_api_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    n_docs = docs.count()
+    qa_events = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("event_id") < 200)
+        .select(
+            "event_id",
+            "ts",
+            F.col("user_id").cast("string").alias("session_id"),
+            ((F.col("event_id") * 13 + 1) % n_docs).alias("q_doc"),
+        )
+        .join(
+            F.broadcast(
+                docs.select(
+                    F.col("doc_id").alias("q_doc"),
+                    F.col("text").alias("question"),
+                )
+            ),
+            "q_doc",
+        )
+        .select("event_id", "ts", "session_id", "question")
+    )
+    prepared = S.prepare_qa_events(qa_events, build_index(docs)).collect()
+
+    threshold = DEFAULT_CONFIG.topic_similarity_threshold
+    margins: list[float] = []
+
+    class _RecordingNP:
+        # the fold's only np.dot is the topic gate's sim
+        def dot(self, a, b):
+            v = np.dot(a, b)
+            margins.append(abs(float(v) - threshold))
+            return v
+
+        def __getattr__(self, name):
+            return getattr(np, name)
+
+    monkeypatch.setattr(S, "np", _RecordingNP())
+    by_session: dict = {}
+    for r in prepared:
+        by_session.setdefault(r["session_id"], []).append(r.asDict())
+    for rows in by_session.values():
+        rows.sort(key=lambda r: (r["ts"], r["event_id"]))
+        S._fold_session_rows(rows, DEFAULT_CONFIG)
+    assert margins, "the fixture replay never reached the topic gate"
+    assert min(margins) > 1e-5, min(margins)

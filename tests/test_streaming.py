@@ -1315,3 +1315,25 @@ def test_maintain_corpus_auto_compacts_index_log(spark, tmpdir):
     center = STS.read_profile_center(spark, f"{tmp}/corpus/profile")
     fresh = ann.corpus_center(IG.read_corpus_index(spark, f"{tmp}/corpus"))
     assert max(abs(a - b) for a, b in zip(center, fresh)) < 1e-9
+
+
+def test_index_log_listing_skips_inflight_append(tmp_path):
+    """A concurrent reader lists the index log while an append is still
+    writing: the append's task files under ``log/_temporary`` are not
+    committed rows and vanish when the job commits, so the listing must
+    skip them (listing them raced the commit into a FileNotFoundException
+    in the ingest handler's concurrent vector-mean stage)."""
+    import os
+
+    from vector_search_question_answer_api_spark.streaming import index_stream as IX
+
+    log = tmp_path / "log"
+    committed = log / "part-00000-a.snappy.parquet"
+    inflight = (
+        log / "_temporary" / "0" / "_temporary" / "attempt_0_m_000000_1"
+        / "part-00000-b.snappy.parquet"
+    )
+    for f in (committed, inflight, log / ".part-00000-a.snappy.parquet"):
+        os.makedirs(f.parent, exist_ok=True)
+        f.write_bytes(b"")
+    assert IX._log_files(str(tmp_path)) == [str(committed)]

@@ -49,7 +49,7 @@ def _load_fixture(path):
 
 
 def curve(n, k, efs, n_queries=50, dim=64, pts=None, tag=None):
-    """Single-graph measurement (numpy backend, M=16/efC=200 — the
+    """Single-graph measurement (NumpyHNSW, M=16/efC=200 — the
     reference's build constants): per-partition recall of the Spark tier
     equals single-graph recall at the same ef (each partition answers
     exactly over its shard and the merge is lossless), so the graph-local

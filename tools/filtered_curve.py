@@ -73,7 +73,7 @@ def main():
     )
     cents = train_centroids(idx, dim=64, n_cells=16, n_iters=5)
     graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=16, backend=None
+        idx, centroids=cents, dim=64, n_cells=16
     ).cache()
     graphs.count()
 

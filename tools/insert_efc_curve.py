@@ -11,8 +11,7 @@ truth — both after one 10% insert wave and after a 5-batch 2% soak (the
 cumulative-degradation check a single wave can hide).
 
 Build-time efc stays 200 everywhere; only the insert beam varies — the
-exact knob ``refresh_celled_hnsw_index(insert_efc=)`` exposes.  Numpy
-backend (the sandbox default; hnswlib bakes efC at construction).
+exact knob ``refresh_celled_hnsw_index(insert_efc=)`` exposes.
 
 Usage::
 

@@ -156,7 +156,6 @@ def run(base: str, rep: int, cells_list: list[int], fracs: list[float]) -> dict:
             t0 = time.perf_counter()
             graphs = ann_hnsw.build_celled_hnsw(
                 corpus, centroids=cents, dim=DIM, n_cells=n_cells,
-                backend="numpy",
             )
             ann_hnsw.write_celled_hnsw_index_managed(graphs, dest, ids=ids)
             return time.perf_counter() - t0
@@ -186,7 +185,7 @@ def run(base: str, rep: int, cells_list: list[int], fracs: list[float]) -> dict:
                     t0 = time.perf_counter()
                     dirty = ann_hnsw.refresh_celled_hnsw_index(
                         spark, g_path, corpus, delta, centroids=cents,
-                        dim=DIM, n_cells=n_cells, backend="numpy",
+                        dim=DIM, n_cells=n_cells,
                     )
                     g_times.append(time.perf_counter() - t0)
                     g_dirty = len(dirty)
@@ -239,7 +238,6 @@ def run(base: str, rep: int, cells_list: list[int], fracs: list[float]) -> dict:
         assert g_rows(ann_hnsw.read_celled_hnsw_index(spark, g_path)) == g_rows(
             ann_hnsw.build_celled_hnsw(
                 corpus, centroids=cents, dim=DIM, n_cells=n_cells,
-                backend="numpy",
             )
         ), f"hnsw store diverged from rebuild at n_cells={n_cells}"
         out["points"] = out["points"]  # keep ordering stable

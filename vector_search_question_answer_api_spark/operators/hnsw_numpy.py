@@ -1,17 +1,16 @@
 """Dependency-free HNSW (Malkov & Yashunin 2016, "Efficient and robust
 approximate nearest neighbor search using Hierarchical Navigable Small
-World graphs") in numpy + heapq — the always-available backend for the
-partitioned graph-ANN tier (operators/ann_hnsw.py).
+World graphs") in numpy + heapq — the one graph implementation behind
+the partitioned graph-ANN tier (operators/ann_hnsw.py).
 
 The reference's entire index is one hnswlib graph
 (services/index_service.py:87-96: cosine space, M=16, ef_construction=200,
-search ef=50).  hnswlib is not part of this engine's base stack, so until
-r5 the graph tier was an environment-gated seam with the LSH/IVF/PQ tiers
-as the working defaults.  This module implements the actual algorithm —
-hierarchical layers with exponentially decaying occupancy, greedy descent
-through upper layers, ef-bounded best-first beam search at each level,
-bidirectional M-links with shrink-to-Mmax — so the tier runs everywhere
-and hnswlib becomes the optional fast backend instead of a requirement.
+search ef=50).  hnswlib is not part of this engine's stack; this module
+implements the actual algorithm instead — hierarchical layers with
+exponentially decaying occupancy, greedy descent through upper layers,
+ef-bounded best-first beam search at each level, bidirectional M-links
+with shrink-to-Mmax — so the tier runs everywhere with no optional
+dependency.
 
 Faithfulness and divergences (documented, deliberate):
 
@@ -56,10 +55,9 @@ import numpy as np
 class NumpyHNSW:
     """One in-memory HNSW graph over L2-normalized vectors (cosine space).
 
-    API mirrors the hnswlib surface the engine touches: ``add_items``,
-    ``knn_query``, ``set_ef``, ``get_current_count`` — so
-    ``ann_hnsw.build_partitioned_hnsw`` / ``hnsw_topk`` run unchanged on
-    either backend.
+    Method names follow the API of hnswlib, the library the reference
+    serves from: ``add_items``, ``knn_query``, ``set_ef``,
+    ``get_current_count``, ``mark_deleted``.
     """
 
     def __init__(
@@ -83,7 +81,7 @@ class NumpyHNSW:
         self.max_level = -1
         self.dead: set[int] = set()
 
-    # -- hnswlib-compatible surface -------------------------------------
+    # -- public surface ------------------------------------------------
     def set_ef(self, ef: int) -> None:
         self.ef = int(ef)
 

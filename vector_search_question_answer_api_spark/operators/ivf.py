@@ -94,12 +94,16 @@ def _cell_scores(vec: Column, centroids) -> Column:
     """Array of cosine scores of ``vec`` (assumed L2-normalized) against
     each centroid: dot(vec, c) / ||c||.
 
-    The centroid table rides as ONE nested-array literal and the scoring is
-    a ``transform`` over it — the expression tree stays O(1) in
-    n_cells x dim, where the unrolled per-centroid form put thousands of
-    literal nodes into the plan and cost seconds of analyzer/codegen time
-    per query (measured 3.2s -> 0.8s at sf0.01, bit-identical values: both
-    forms sum left-to-right in float64).
+    The centroid table is spelled as ONE ``array(named_struct(...))`` SQL
+    expression (n_cells x dim literal values, parsed JVM-side in one call)
+    and the scoring is a single ``zip_with`` over it, so the scoring
+    lambda appears once in the plan instead of once per centroid — the
+    unrolled per-centroid form cost seconds of analyzer/codegen time per
+    query (measured 3.2s -> 0.8s at sf0.01, bit-identical values: both
+    forms sum left-to-right in float64).  Every centroid component must be
+    finite: a NaN/inf would format as ``nanD``/``infD``, which Spark
+    reads as a column name, so it raises a ``ValueError`` naming the
+    centroid instead.
 
     r16 (optimization round): two hoists out of the per-centroid lambda,
     values bit-identical (pinned in tests/test_ann.py):
@@ -115,7 +119,12 @@ def _cell_scores(vec: Column, centroids) -> Column:
     """
     n_cells = len(centroids)
     structs = []
-    for c in centroids:
+    for j, c in enumerate(centroids):
+        if not all(math.isfinite(float(y)) for y in c):
+            raise ValueError(
+                f"centroid {j} has a non-finite component (NaN or inf); "
+                "cell routing needs finite centroids"
+            )
         acc = 0.0
         for y in c:
             # the exact fold the r15 expression evaluated JVM-side:

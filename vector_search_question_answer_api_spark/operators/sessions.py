@@ -592,8 +592,8 @@ def _attach_candidates(
     is the float32 embed re-normalized in double, so the cast costs at
     most one rounding step (~1e-7 on a unit dot), five orders of
     magnitude below the measured minimum |sim - threshold| margin on the
-    driver fixtures (tools/replay_gate_margin.py; replay outputs pinned
-    identical old-vs-new at every SF in tests/test_sessions.py)."""
+    driver fixtures (floor pinned by tests/test_sessions.py::
+    test_replay_topic_gate_margin_clears_float32_narrowing)."""
     hits = top1.select(
         F.col("query_id").alias("event_id"),
         F.col("doc_id").alias("cand_doc_id"),

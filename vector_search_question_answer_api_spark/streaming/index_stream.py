@@ -120,12 +120,20 @@ def _log_files(path: str) -> list[str]:
     # even when compact_index and this reader spell the index path
     # differently (ADVICE r6)
     retired = set(_retired(path))
+    log = os.path.join(path, "log")
     return sorted(
         f
-        for f in glob.glob(
-            os.path.join(path, "log", "**", "*.parquet"), recursive=True
-        )
+        for f in glob.glob(os.path.join(log, "**", "*.parquet"), recursive=True)
         if os.path.realpath(f) not in retired
+        # an append still in flight keeps its task files under
+        # log/_temporary until its job commits and moves them; listing
+        # them races that move (FileNotFoundException in a concurrent
+        # reader) and reads uncommitted rows.  Spark's own listing skips
+        # "_"/"." names for the same reason.
+        and not any(
+            part.startswith(("_", "."))
+            for part in os.path.relpath(f, log).split(os.sep)
+        )
     )
 
 
